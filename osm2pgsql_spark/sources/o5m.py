@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from osm2pgsql_spark.model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
+from osm2pgsql_spark.sources import rows_frame
 
 _NODE, _WAY, _REL = 0x10, 0x11, 0x12
 _BBOX, _TIMESTAMP, _HEADER, _SYNC, _JUMP, _RESET = 0xDB, 0xDC, 0xE0, 0xEE, 0xEF, 0xFF
@@ -253,9 +254,9 @@ def read_o5m(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, Data
         data = fh.read()
     nodes, ways, rels = _parse(data)
     return (
-        spark.createDataFrame(nodes, NODE_SCHEMA),
-        spark.createDataFrame(ways, WAY_SCHEMA),
-        spark.createDataFrame(rels, RELATION_SCHEMA),
+        rows_frame(spark, nodes, NODE_SCHEMA),
+        rows_frame(spark, ways, WAY_SCHEMA),
+        rows_frame(spark, rels, RELATION_SCHEMA),
     )
 
 
@@ -284,9 +285,9 @@ def read_o5c(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame, Data
         ]
 
     return (
-        spark.createDataFrame(mark(nodes), schema(NODE_SCHEMA)),
-        spark.createDataFrame(mark(ways), schema(WAY_SCHEMA)),
-        spark.createDataFrame(mark(rels), schema(RELATION_SCHEMA)),
+        rows_frame(spark, mark(nodes), schema(NODE_SCHEMA)),
+        rows_frame(spark, mark(ways), schema(WAY_SCHEMA)),
+        rows_frame(spark, mark(rels), schema(RELATION_SCHEMA)),
     )
 
 

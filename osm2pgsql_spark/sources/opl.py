@@ -25,6 +25,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from osm2pgsql_spark.model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
+from osm2pgsql_spark.sources import rows_frame
 
 
 # OPL escapes one character as %<hex Unicode codepoint>% (variable
@@ -138,9 +139,9 @@ def read_opl(
                 )
             )
     return (
-        spark.createDataFrame(nodes, NODE_SCHEMA),
-        spark.createDataFrame(ways, WAY_SCHEMA),
-        spark.createDataFrame(rels, RELATION_SCHEMA),
+        rows_frame(spark, nodes, NODE_SCHEMA),
+        rows_frame(spark, ways, WAY_SCHEMA),
+        rows_frame(spark, rels, RELATION_SCHEMA),
     )
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from osm2pgsql_spark.model import NODE_SCHEMA, RELATION_SCHEMA, WAY_SCHEMA
+from osm2pgsql_spark.sources import rows_frame
 
 
 def _attrs(el) -> tuple:
@@ -121,9 +122,9 @@ def read_osm_xml(
     root = _parse_root(path)
     nodes, ways, rels = _parse(root, op=None)
     return (
-        _with_ts(spark.createDataFrame(nodes, _schema(NODE_SCHEMA, False))),
-        _with_ts(spark.createDataFrame(ways, _schema(WAY_SCHEMA, False))),
-        _with_ts(spark.createDataFrame(rels, _schema(RELATION_SCHEMA, False))),
+        _with_ts(rows_frame(spark, nodes, _schema(NODE_SCHEMA, False))),
+        _with_ts(rows_frame(spark, ways, _schema(WAY_SCHEMA, False))),
+        _with_ts(rows_frame(spark, rels, _schema(RELATION_SCHEMA, False))),
     )
 
 
@@ -147,7 +148,7 @@ def read_osc_xml(
     all_ways = [(*row, i) for i, row in enumerate(all_ways)]
     all_rels = [(*row, i) for i, row in enumerate(all_rels)]
     return (
-        _with_ts(spark.createDataFrame(all_nodes, _schema(NODE_SCHEMA, True))),
-        _with_ts(spark.createDataFrame(all_ways, _schema(WAY_SCHEMA, True))),
-        _with_ts(spark.createDataFrame(all_rels, _schema(RELATION_SCHEMA, True))),
+        _with_ts(rows_frame(spark, all_nodes, _schema(NODE_SCHEMA, True))),
+        _with_ts(rows_frame(spark, all_ways, _schema(WAY_SCHEMA, True))),
+        _with_ts(rows_frame(spark, all_rels, _schema(RELATION_SCHEMA, True))),
     )

@@ -1011,3 +1011,117 @@ def test_expire_zoom_clamped_to_31(tmp_path):
             "been set to 31.") in r.stderr
     txt = (tmp_path / "d.list").read_text().strip().splitlines()
     assert txt and all(t.startswith("31/") for t in txt)
+
+
+# --- per-table expiry keys and refresh-mode equivalence ---------------
+
+# r500 is a multipolygon over the untagged ring w10, so the generic
+# style stores it in polygons as osm_id -500.  n5 is an untagged node
+# whose id collides with way w5, far away from it.  w21 is a road whose
+# node n21 moves (dependency propagation), n8 is a deleted pub, n30 a
+# created cafe.
+OPL_REL = """n1 x9.0 y50.0
+n2 x9.01 y50.0
+n3 x9.01 y50.01
+n4 x9.0 y50.01
+w10 Nn1,n2,n3,n4,n1
+r500 Ttype=multipolygon,landuse=forest Mw10@outer
+n5 x9.3 y50.3
+n6 x9.5 y50.5
+n7 x9.51 y50.5
+w5 Thighway=residential Nn6,n7
+n8 Tamenity=pub x9.2 y50.2
+n20 x9.4 y50.4
+n21 x9.41 y50.41
+w21 Thighway=service Nn20,n21
+"""
+
+OSC_REL = """<?xml version='1.0'?>
+<osmChange version="0.6">
+  <modify>
+    <relation id="500" version="2" timestamp="2024-02-01T00:00:00Z">
+      <member type="way" ref="10" role="outer"/>
+      <tag k="type" v="multipolygon"/><tag k="landuse" v="meadow"/>
+    </relation>
+    <node id="5" lat="50.31" lon="9.31" version="2" timestamp="2024-02-01T00:00:00Z"/>
+    <node id="21" lat="50.42" lon="9.42" version="2" timestamp="2024-02-01T00:00:00Z"/>
+  </modify>
+  <delete><node id="8" version="2" timestamp="2024-02-01T00:00:00Z"/></delete>
+  <create>
+    <node id="30" lat="50.25" lon="9.25" version="1" timestamp="2024-02-01T00:00:00Z">
+      <tag k="amenity" v="cafe"/>
+    </node>
+  </create>
+</osmChange>
+"""
+
+REL_ZOOM = 14
+
+
+def _z_tile(lon: float, lat: float, z: int = REL_ZOOM) -> str:
+    import math
+
+    n = 1 << z
+    x = int((lon + 180.0) / 360.0 * n)
+    y = int((1.0 - math.asinh(math.tan(math.radians(lat))) / math.pi) / 2.0 * n)
+    return f"{z}/{x}/{y}"
+
+
+@pytest.fixture(scope="module")
+def relation_diff(tmp_path_factory):
+    """The OPL_REL base imported once, then OSC_REL applied to a copy
+    under each refresh mode: {mode: (db dir, expire lines)}."""
+    import shutil
+
+    d = tmp_path_factory.mktemp("reldiff")
+    (d / "in.opl").write_text(OPL_REL)
+    (d / "c.osc").write_text(OSC_REL)
+    base = d / "base"
+    r = _run([str(d / "in.opl"), str(base)])
+    assert r.returncode == 0, r.stderr[-2000:]
+    out = {}
+    for mode in ("full", "incremental"):
+        db = d / f"db_{mode}"
+        shutil.copytree(base, db)
+        expire = d / f"{mode}.list"
+        r = _run([str(d / "c.osc"), str(db), "--append", "--refresh", mode,
+                  "--expire-tiles", str(REL_ZOOM), "--expire-output", str(expire)])
+        assert r.returncode == 0, r.stderr[-2000:]
+        out[mode] = (db, sorted(expire.read_text().split()))
+    return out
+
+
+def test_append_expires_relation_area_in_its_id_space(relation_diff, spark):
+    """A relation-only tag change rewrites polygons row -500 and must
+    expire its tiles; an untagged node must not expire the way that
+    shares its id."""
+    for mode, (db, tiles) in relation_diff.items():
+        polys = {r["osm_id"]: r["tags"] for r in
+                 spark.read.parquet(str(db / "tables" / "polygons")).collect()}
+        assert "meadow" in polys[-500], mode
+        for lon, lat in ((9.0, 50.0), (9.01, 50.0), (9.01, 50.01), (9.0, 50.01)):
+            assert _z_tile(lon, lat) in tiles, (mode, lon, lat)
+        for lon, lat in ((9.5, 50.5), (9.51, 50.5)):
+            assert _z_tile(lon, lat) not in tiles, (mode, lon, lat)
+        # the other changes still expire: moved road, deleted and
+        # created points
+        for lon, lat in ((9.41, 50.41), (9.42, 50.42), (9.2, 50.2), (9.25, 50.25)):
+            assert _z_tile(lon, lat) in tiles, (mode, lon, lat)
+
+
+def test_append_full_and_incremental_refresh_agree(relation_diff, spark):
+    """The same diff gives the same expire list and the same tables
+    under --refresh full and --refresh incremental."""
+    (full_db, full_tiles), (inc_db, inc_tiles) = (
+        relation_diff["full"], relation_diff["incremental"])
+    assert full_tiles == inc_tiles
+    names = sorted(os.listdir(full_db / "tables"))
+    assert names == sorted(os.listdir(inc_db / "tables"))
+    for name in names:
+        full = spark.read.parquet(str(full_db / "tables" / name))
+        inc = spark.read.parquet(str(inc_db / "tables" / name))
+        assert sorted(full.columns) == sorted(inc.columns), name
+        cols = sorted(full.columns)
+        a = sorted(tuple(str(v) for v in row) for row in full.select(cols).collect())
+        b = sorted(tuple(str(v) for v in row) for row in inc.select(cols).collect())
+        assert a == b, name

@@ -338,10 +338,17 @@ def _middle(out_dir: str, name: str):
 
 
 def _write_tables(tables: dict[str, DataFrame], out_dir: str) -> dict[str, int]:
+    """Each table lands beside its old version and then replaces it, so
+    a refreshed table may be a lazy frame over its own old rows."""
+    import shutil
+
     counts = {}
     for name, df in tables.items():
         path = os.path.join(out_dir, "tables", name)
-        df.write.mode("overwrite").parquet(path)
+        staged = path + ".new"
+        df.write.mode("overwrite").parquet(staged)
+        shutil.rmtree(path, ignore_errors=True)
+        os.replace(staged, path)
         counts[name] = df.sparkSession.read.parquet(path).count()
     return counts
 
@@ -405,24 +412,24 @@ def _geom_tile_kernel(maxzoom: int, buffer: float, max_bbox: float = 20000.0):
 
 
 def expire_tiles_of(
-    tables: dict[str, DataFrame], touched: DataFrame | None, maxzoom: int,
+    tables: dict[str, DataFrame],
+    touched: dict[str, tuple[DataFrame, list[str]]], maxzoom: int,
     buffer: float = 0.1, max_bbox: float = 20000.0,
 ) -> DataFrame | None:
     """Distinct (x, y) dirty tiles across every geometry column of the
-    touched rows (old or new side; caller unions both)."""
-    spark = None
+    touched rows (old or new side; caller unions both).  touched maps a
+    table name to its touched keys and their join columns, in the
+    table's own id space (_touched_keys); tables without an entry, or
+    without the key columns, expire every row."""
     parts = []
-    for df in tables.values():
-        spark = df.sparkSession
+    for name, df in tables.items():
         geom_cols = [c for c, t in df.dtypes if t == "binary"]
         if not geom_cols:
             continue
         sel = df
-        if touched is not None and "osm_id" in df.columns:
-            sel = df.join(
-                touched.select(F.col(touched.columns[0]).alias("osm_id")).distinct(),
-                "osm_id", "leftsemi",
-            )
+        keys, key_cols = touched.get(name, (None, []))
+        if keys is not None and set(key_cols) <= set(df.columns):
+            sel = df.join(keys, key_cols, "leftsemi")
         for g in geom_cols:
             parts.append(sel.select(F.col(g).alias("geom")))
     if not parts:
@@ -436,16 +443,15 @@ def expire_tiles_of(
 
 
 def _data_timestamp(frames) -> "datetime.datetime | None":
-    """Newest object timestamp across the input frames (the session
-    runs in UTC, so the naive max is a UTC wall time)."""
-    best = None
-    for df in frames:
-        if "ts" not in df.columns:
-            continue
-        v = df.agg(F.max("ts")).first()[0]
-        if v is not None and (best is None or v > best):
-            best = v
-    return best
+    """Newest object timestamp across the input frames, in one action
+    (the session runs in UTC, so the naive max is a UTC wall time)."""
+    stamps = [df.select("ts") for df in frames if "ts" in df.columns]
+    if not stamps:
+        return None
+    allts = stamps[0]
+    for df in stamps[1:]:
+        allts = allts.unionByName(df)
+    return allts.agg(F.max("ts")).first()[0]
 
 
 _BBOX_NUM_RE = re.compile(
@@ -782,9 +788,6 @@ def _pg_apply_append(args, new_side, log_new, id_spaces,
     mid_schema, out_schema = resolve_schemas(args)
     fac = PsqlConnectFactory(parse_conninfo(args.pg))
     for name, new_rows in new_side.items():
-        # materialize once: the touched-closure style pipeline would
-        # otherwise re-evaluate for the insert AND the anti-join side
-        new_rows = new_rows.localCheckpoint()
         keys, key_cols = _touched_keys(
             id_spaces[name], node_ids, way_ids, rel_ids)
         schema = dict(new_rows.dtypes)
@@ -860,6 +863,7 @@ def _pg_apply_append(args, new_side, log_new, id_spaces,
 
 
 def cmd_append(args, spark) -> None:
+    from osm2pgsql_spark.operators.iterate import checkpoint
     from osm2pgsql_spark.streaming.append import affected_ids, apply_diff
     from osm2pgsql_spark.streaming.properties import Properties
 
@@ -910,9 +914,13 @@ def cmd_append(args, spark) -> None:
     def _ids(df: DataFrame) -> DataFrame:
         return df.select(F.col(df.columns[0]).alias("id"))
 
-    node_ids = _ids(sets.changed_nodes).distinct()
-    way_ids = _ids(sets.changed_ways).unionByName(_ids(sets.pending_ways)).distinct()
-    rel_ids = _ids(sets.changed_rels).unionByName(_ids(sets.pending_rels)).distinct()
+    # the change set, O(diff): materialized once, so the semi-joins
+    # below read it instead of re-running the reverse-dependency joins
+    node_ids = checkpoint(_ids(sets.changed_nodes).distinct())
+    way_ids = checkpoint(
+        _ids(sets.changed_ways).unionByName(_ids(sets.pending_ways)).distinct())
+    rel_ids = checkpoint(
+        _ids(sets.changed_rels).unionByName(_ids(sets.pending_rels)).distinct())
 
     if incremental and set(id_spaces) == log_tables:
         # every table is an append-only log: the dedicated log pass
@@ -958,12 +966,25 @@ def cmd_append(args, spark) -> None:
     log_new = (_log_table_rows(style_fn, log_tables, n_diff, w_diff, r_diff,
                                new_nodes, new_ways, new_rels)
                if log_tables else {})
+    # the new side, evaluated once: expiry, the table refresh and the
+    # live-database replay all read these frames, and none of them
+    # reads the middle files the MERGE below swaps
+    new_side = {name: checkpoint(df) for name, df in new_side.items()}
+    log_new = {name: checkpoint(df) for name, df in log_new.items()}
 
     # expire BEFORE swapping: old tables must still be readable.
     # Dirty = old+new tiles of directly-changed and dependency-pending
-    # objects (src/output-flex.cpp delete_from_table + insert expiry).
+    # objects (src/output-flex.cpp delete_from_table + insert expiry),
+    # each table keyed in its own id space (area tables hold relations
+    # as -id; a node never expires the way with the same id).
     if args.expire_tiles:
-        touched = node_ids.unionByName(way_ids).unionByName(rel_ids).distinct()
+        raw_ids = (node_ids.unionByName(way_ids).unionByName(rel_ids)
+                   .select(F.col("id").alias("osm_id")).distinct())
+        touched = {
+            name: (_touched_keys(id_spaces[name], node_ids, way_ids, rel_ids)
+                   if (id_spaces or {}).get(name) else (raw_ids, ["osm_id"]))
+            for name in {*old_tables, *new_side}
+        }
         dirty = []
         for side in (old_tables, new_side):
             t = expire_tiles_of(side, touched, args.expire_tiles,
@@ -1017,9 +1038,8 @@ def cmd_append(args, spark) -> None:
         from osm2pgsql_spark.streaming.merge_sink import ParquetMergeTable
 
         if getattr(args, "pg", None):
-            # BEFORE the middle/output merges swap the parquet files
-            # the change-set lineage still reads (same ordering rule
-            # as the refreshed-outputs materialization below)
+            # the database first, then the local files (same order as
+            # the plain-format path below)
             _pg_apply_append(args, new_side, log_new, id_spaces,
                              node_ids, way_ids, rel_ids, log_tables,
                              diffs=(n_diff, w_diff, r_diff))
@@ -1029,8 +1049,7 @@ def cmd_append(args, spark) -> None:
                 id_spaces[name], node_ids, way_ids, rel_ids)
             mt = ParquetMergeTable(
                 os.path.join(args.out_dir, "tables", name), id_col="osm_id")
-            buckets = mt.merge_refresh(
-                spark, keys, new_rows.localCheckpoint(), key_cols)
+            buckets = mt.merge_refresh(spark, keys, new_rows, key_cols)
             counts[name] = mt.read(spark).count()
             print(f"table {name}: merged {len(buckets)} bucket(s)")
         for name in log_tables:
@@ -1062,8 +1081,8 @@ def cmd_append(args, spark) -> None:
                                 schema=resolve_schemas(args)[0])
         return
 
-    # materialize the refreshed outputs BEFORE the middle MERGE swaps
-    # the parquet files their lineage still reads
+    # the refreshed outputs read the materialized new side and their
+    # own old rows (_write_tables stages each table beside the old one)
     if incremental:
         refreshed = {}
         for name, new_rows in new_side.items():
@@ -1071,9 +1090,9 @@ def cmd_append(args, spark) -> None:
             old_rows = spark.read.parquet(path)
             keep = old_rows.join(*_touched_keys(
                 id_spaces[name], node_ids, way_ids, rel_ids), "left_anti")
-            refreshed[name] = keep.unionByName(new_rows).localCheckpoint()
+            refreshed[name] = keep.unionByName(new_rows)
     else:
-        refreshed = {n: df.localCheckpoint() for n, df in new_side.items()}
+        refreshed = dict(new_side)
     for name in log_tables:
         # append-only: old rows always kept, file-pass + deleted rows added
         path = os.path.join(args.out_dir, "tables", name)
@@ -1082,19 +1101,17 @@ def cmd_append(args, spark) -> None:
         if old_rows is None and add is None:
             continue
         if old_rows is None:
-            refreshed[name] = add.localCheckpoint()
+            refreshed[name] = add
         elif add is None:
-            refreshed[name] = old_rows.localCheckpoint()
+            refreshed[name] = old_rows
         else:
             refreshed[name] = old_rows.unionByName(
-                add, allowMissingColumns=True).localCheckpoint()
+                add, allowMissingColumns=True)
 
     if getattr(args, "pg", None):
-        # live-database twin of the refresh below.  MUST run before
-        # the middle MERGE: the change-set lineage (touched closure,
-        # affected-id frames) still reads the middle parquet files the
-        # merge is about to swap (same rule as the refreshed-outputs
-        # materialization above).
+        # live-database twin of the refresh below, before any local
+        # file changes, so a failed replay leaves the local store as
+        # it was
         if not incremental:
             raise SystemExit(
                 "--append --pg needs an incremental-capable style "
